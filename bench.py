@@ -346,7 +346,7 @@ def main() -> None:
     # --- lineage + health over extraction output ----------------------------
     timed(
         "lineage_health",
-        lambda: health_rollup(lineage_rows(run_extraction(pages, repartition=False))).collect(),
+        lambda: health_rollup(lineage_rows(run_extraction(pages))).collect(),
     )
 
     # --- training-data operator suite (base corpus, no replication) ---------

@@ -139,6 +139,9 @@ CORE_RESULT_SCHEMA = T.StructType(
 )
 
 # --- Lineage schema (north rule: per-partition lineage rows) ----------------
+# part_id is a url bucket, pmod(xxhash64(url), LINEAGE_BUCKETS) — see
+# operators/lineage.lineage_rows — not a Spark partition id, so the rows do
+# not depend on how the run was split.
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("part_id", T.IntegerType()),

@@ -45,8 +45,8 @@ def parse_args(argv=None):
         "--circuit-breaker",
         action="store_true",
         help="replay the prior run's lineage through the R3 health state "
-        "machine and short-circuit tripped backends to model-not-loaded "
-        "rows (requires --lineage)",
+        "machine and skip tripped backends' rows; they are not written and "
+        "are retried on a later run (requires --lineage)",
     )
     return p.parse_args(argv)
 

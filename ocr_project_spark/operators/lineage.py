@@ -2,7 +2,7 @@
 
 The reference polls live ``/health`` endpoints and keeps consecutive-failure
 counters (reference: orchestrator/server.py:60-109, 339-380); the batch
-analog is a lineage table — one row per (partition, backend) with doc/byte
+analog is a lineage table — one row per (url bucket, backend) with doc/byte
 counts — and plain aggregations over it. Partial aggregation (map-side
 combine) comes free from Catalyst.
 """
@@ -21,14 +21,23 @@ UNHEALTHY_RATE = 0.5
 FAILURE_THRESHOLD = 3  # consecutive failures before marking unhealthy
 SUCCESS_THRESHOLD = 2  # consecutive successes before marking healthy
 
+# Lineage groups each run's rows into this many url-hash buckets; each
+# (bucket, backend) row is one health check for the circuit breaker.
+LINEAGE_BUCKETS = 64
+
 
 def lineage_rows(results: DataFrame) -> DataFrame:
-    """Per-(partition, backend) lineage: doc count, success/failure split,
-    extracted byte count. ``spark_partition_id`` identifies the input split —
-    the extraction operator is narrow, so result partitions are input splits.
+    """Per-(url bucket, backend) lineage: doc count, success/failure split,
+    extracted byte count. ``part_id`` is ``pmod(xxhash64(url),
+    LINEAGE_BUCKETS)`` — a pure function of the url, so lineage rows (and
+    the breaker verdicts replayed from them) are the same whatever core
+    count, partition count or file packing the run had.
     """
     return (
-        results.withColumn("part_id", F.spark_partition_id())
+        results.withColumn(
+            "part_id",
+            F.pmod(F.xxhash64("url"), F.lit(LINEAGE_BUCKETS)).cast("int"),
+        )
         .groupBy("part_id", "backend")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -64,16 +73,15 @@ def circuit_breaker_gate(lineage: DataFrame) -> dict[str, bool]:
     """R3 circuit-breaker analog: replay the reference's per-backend health
     state machine (orchestrator/server.py:85-109 consecutive-failure
     counters, thresholds orchestrator/config.py:38-42) over a prior run's
-    lineage, partition order standing in for poll order. A partition with
+    lineage, url-bucket order standing in for poll order. A bucket with
     zero successes and ≥1 failure is a failed health check; a backend whose
-    trailing run reaches ``FAILURE_THRESHOLD`` consecutive failed partitions
-    trips open (skipped — its next-run rows short-circuit to the
-    model-not-loaded shape) and closes again after ``SUCCESS_THRESHOLD``
-    consecutive healthy partitions. With the incremental lineage table
-    (one append per run, stamped with a monotone ``run_id``), the replay
-    walks (run_id, part_id) order — so healthy half-open-probe partitions
-    appended by a later breaker-enabled run close the breaker without any
-    manual intervention.
+    trailing run reaches ``FAILURE_THRESHOLD`` consecutive failed buckets
+    trips open (skipped — its next-run rows are not extracted) and closes
+    again after ``SUCCESS_THRESHOLD`` consecutive healthy buckets. With the
+    incremental lineage table (one append per run, stamped with a monotone
+    ``run_id``), the replay walks (run_id, part_id) order — so healthy
+    half-open-probe buckets appended by a later breaker-enabled run close
+    the breaker without any manual intervention.
 
     The replay runs IN Spark, not on the driver: the final breaker state is
     exactly "which decisive streak completed last" — a run of
@@ -89,7 +97,7 @@ def circuit_breaker_gate(lineage: DataFrame) -> dict[str, bool]:
     has_run = "run_id" in lineage.columns
     # (n_success, n_failed) tie-breakers: one run can append two rows with
     # the SAME (run_id, part_id) for a backend (result lineage + probe-fail
-    # lineage both derive part_id from spark_partition_id()), and a
+    # lineage are grouped separately over the same url buckets), and a
     # nondeterministic tie order could flip which decisive streak completes
     # last — the gate verdict must be a pure function of the lineage rows
     # (resume determinism), so the order replays the old driver-side sort

@@ -15,7 +15,10 @@ by exactly one run). Idempotence is covered by tests/test_resume.py.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+_EMPTY_STORE_CONDITIONS = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
 
 def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
@@ -24,12 +27,17 @@ def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     Probing by attempting the read (and catching the analysis error) instead
     of a driver-local ``os.path`` check keeps the resume/lineage machinery
     portable to HDFS/S3 paths, where the driver's local filesystem knows
-    nothing about the store.
+    nothing about the store. Only a missing directory (``PATH_NOT_FOUND``)
+    or one with no data files (``UNABLE_TO_INFER_SCHEMA``) is a cold start:
+    any other failure — a corrupt part file — propagates, because treating
+    it as empty would re-extract every url and break exactly-once.
     """
     try:
         return spark.read.parquet(path)
-    except Exception:  # noqa: BLE001 — missing/empty/corrupt dir → cold start
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in _EMPTY_STORE_CONDITIONS:
+            return None
+        raise
 
 
 def completed_urls(spark: SparkSession, results_path: str) -> DataFrame | None:
@@ -108,38 +116,6 @@ def crawl_delta(
         .otherwise("unchanged")
         .alias("status"),
     )
-
-
-def write_results_bucketed(
-    results: DataFrame,
-    table: str,
-    buckets: int = 64,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Persist results as a url-bucketed, url-sorted table (the Iceberg
-    bucket-transform analog over the session catalog): every append keeps
-    rows hash-clustered by the resume key, so the next run's anti-join
-    reads the done side already partitioned — no shuffle on the
-    (large) checkpoint side, ever. ``buckets`` should match the shuffle
-    parallelism the pages side will use."""
-    writer = results.write.mode("append")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    (
-        writer.bucketBy(buckets, "url")
-        .sortBy("url")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def completed_urls_bucketed(spark: SparkSession, table: str) -> DataFrame | None:
-    """Done-urls view of a bucketed results table (column-pruned to url;
-    the bucketing metadata lets Catalyst skip the done-side exchange in
-    the resume anti-join — asserted in tests/test_plans.py)."""
-    if not spark.catalog.tableExists(table):
-        return None
-    return spark.table(table).select("url")
 
 
 def resume_filter(

@@ -12,8 +12,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ocr_project_spark.kernels.registry import BACKEND_REGISTRY
 from ocr_project_spark.operators.extract import extract_documents
-from ocr_project_spark.operators.lineage import lineage_rows
+from ocr_project_spark.operators.lineage import circuit_breaker_gate, lineage_rows
 from ocr_project_spark.operators.resume import (
     completed_urls,
     read_parquet_if_exists,
@@ -28,17 +29,18 @@ from ocr_project_spark.operators.skew import salted_repartition
 # close the breaker without an operator manually disabling it.
 HALF_OPEN_PROBE_MOD = 16
 
+# Results file-size bound: keeps the results table scan-friendly at 100 TB
+# (no multi-GB files from fat partitions, no planner pressure from tiny ones).
+MAX_RECORDS_PER_FILE = 500_000
 
-def run_extraction(
-    pages: DataFrame,
-    num_partitions: int | None = None,
-    model_loaded: dict | None = None,
-    repartition: bool = True,
-) -> DataFrame:
-    """pages → unified results DataFrame (lazy; caller writes/aggregates)."""
-    if repartition and num_partitions:
+
+def run_extraction(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """pages → unified results DataFrame (lazy; caller writes/aggregates).
+    ``num_partitions`` adds the salted url-hash repartition; None extracts
+    in the input's own partitioning."""
+    if num_partitions:
         pages = salted_repartition(pages, num_partitions)
-    return extract_documents(pages, model_loaded=model_loaded)
+    return extract_documents(pages)
 
 
 def this_run_results(
@@ -73,127 +75,92 @@ def _next_run_id(lineage_prior: DataFrame | None) -> int:
 def run_job(
     spark: SparkSession,
     pages: DataFrame,
-    results_path: str | None,
+    results_path: str,
     lineage_path: str | None = None,
     num_partitions: int | None = None,
-    max_records_per_file: int | None = 500_000,
     circuit_breaker: bool = False,
     probe_mod: int = HALF_OPEN_PROBE_MOD,
-    bucketed_table: str | None = None,
-    buckets: int = 64,
 ) -> None:
     """Resumable batch job: skip completed urls, extract, append results and
     lineage. Crash-and-rerun converges to the same result set (see
-    tests/test_resume.py). ``max_records_per_file`` bounds output file sizes
-    so the results table stays scan-friendly at 100 TB (no multi-GB files
-    from fat partitions, no planner pressure from tiny ones).
+    tests/test_resume.py). Results files hold at most
+    ``MAX_RECORDS_PER_FILE`` rows.
 
     Lineage is INCREMENTAL: each run stamps its rows with a monotone
     ``run_id``, reads back only its own rows (parquet row-group stats skip
-    every other run's files), and APPENDS its per-(partition, backend)
+    every other run's files), and APPENDS its per-(url bucket, backend)
     lineage — the accumulated results table is never re-scanned, and
     ``health_rollup`` aggregates the appends (it already partial-aggs).
 
     ``circuit_breaker=True`` replays the accumulated lineage through the R3
-    health state machine (operators/lineage.circuit_breaker_gate) and
-    short-circuits a tripped backend's rows to the model-not-loaded shape
-    instead of running its kernel — EXCEPT a deterministic ~1/``probe_mod``
-    url sample (the half-open probe), which still runs so the breaker can
-    observe recovery and close itself: probe successes are real results
-    (checkpointed + healthy lineage), probe failures are treated as
-    infrastructure evidence — lineage only, never checkpointed, so the urls
-    retry once the backend recovers.
-
-    ``bucketed_table`` switches the results store from a plain parquet
-    directory to a url-bucketed catalog table (PLANS §2b): each run's
-    append keeps rows hash-clustered on the resume key, so the next run's
-    anti-join reads the (at scale, enormous) done side pre-partitioned —
-    the done-side exchange disappears from the plan entirely. When set,
-    ``results_path`` is ignored (pass None); ``buckets`` should match the
-    pages side's shuffle parallelism. Identical resume/convergence
-    semantics either way (tests/test_resume.py runs the crash/rerun/noop
-    suite against both stores)."""
+    health state machine (operators/lineage.circuit_breaker_gate) and skips
+    a tripped backend's rows before extraction — EXCEPT a deterministic
+    ~1/``probe_mod`` url sample (the half-open probe), which still runs so
+    the breaker can observe recovery and close itself: probe successes are
+    real results (checkpointed + healthy lineage), probe failures are
+    treated as infrastructure evidence — lineage only, never checkpointed,
+    so the urls retry once the backend recovers. All non-probe rows of a
+    tripped backend wait, its invalid-mode and missing-payload rows too:
+    they are written as document errors once the breaker closes."""
     lineage_prior = (
         read_parquet_if_exists(spark, lineage_path) if lineage_path else None
     )
-    model_loaded = None
+    tripped = []
     if circuit_breaker and lineage_prior is not None:
-        from ocr_project_spark.operators.lineage import circuit_breaker_gate
-
-        model_loaded = circuit_breaker_gate(lineage_prior)
+        gate = circuit_breaker_gate(lineage_prior)
+        # An unknown backend name fails every check, so its breaker would
+        # never close: only registered backends trip, and unknown names
+        # always reach the wrapper as "Invalid backend" document errors.
+        tripped = [
+            b for b, ok in gate.items() if not ok and b in BACKEND_REGISTRY
+        ]
     run_id = _next_run_id(lineage_prior)
-    if bucketed_table is not None:
-        from ocr_project_spark.operators.resume import completed_urls_bucketed
-
-        done = completed_urls_bucketed(spark, bucketed_table)
-    else:
-        done = completed_urls(spark, results_path)
-    todo = resume_filter(pages, done)
-
-    from ocr_project_spark.contract import ERR_MODEL_NOT_LOADED
+    todo = resume_filter(pages, completed_urls(spark, results_path))
 
     probe_results = None
     probe_fail_lineage = None
-    tripped = [b for b, ok in (model_loaded or {}).items() if not ok]
     parts: list[DataFrame] = []
-    if tripped and probe_mod:
-        is_probe = F.col("backend").isin(tripped) & (
-            F.crc32(F.col("url")) % probe_mod == 0
-        )
-        # the probe set is bounded (~todo/probe_mod of the tripped backend
-        # only), so persisting it for the dual success/failure use is cheap.
-        # Probe FAILURES are deliberately infra evidence, never checkpointed
-        # results: under an open breaker a failure cannot be attributed to
-        # the document (the reference's down-backend errors mask document
-        # status), so the url stays retryable until the breaker closes —
-        # the trade-off is that a genuinely-malformed probe doc re-probes
-        # each breaker-open run (bounded by probe_mod) until recovery.
-        probe_results = run_extraction(
-            todo.where(is_probe), num_partitions=num_partitions
-        ).persist()
-        parts.append(probe_results.where(F.col("success")))
-        probe_fail_lineage = lineage_rows(probe_results.where(~F.col("success")))
-        todo = todo.where(~is_probe)
+    if tripped:
+        # NULL backends are not tripped either (isin is NULL for them).
+        is_tripped = F.coalesce(F.col("backend").isin(tripped), F.lit(False))
+        if probe_mod:
+            is_probe = is_tripped & (F.crc32(F.col("url")) % probe_mod == 0)
+            # the probe set is bounded (~todo/probe_mod of the tripped
+            # backend only), so persisting it for the dual success/failure
+            # use is cheap. Probe FAILURES are deliberately infra evidence,
+            # never checkpointed results: under an open breaker a failure
+            # cannot be attributed to the document (the reference's
+            # down-backend errors mask document status), so the url stays
+            # retryable until the breaker closes — the trade-off is that a
+            # genuinely-malformed probe doc re-probes each breaker-open run
+            # (bounded by probe_mod) until recovery.
+            probe_results = run_extraction(
+                todo.where(is_probe), num_partitions=num_partitions
+            ).persist()
+            parts.append(probe_results.where(F.col("success")))
+            probe_fail_lineage = lineage_rows(
+                probe_results.where(~F.col("success"))
+            )
+        # A breaker skip is an *infrastructure* condition, not a property of
+        # the document — checkpointing it would permanently exclude the url
+        # because completed_urls marks every written url done. Skipped rows
+        # are simply never extracted, so the next run with a healthy backend
+        # retries exactly those urls and the result set converges
+        # (tests/test_pipeline.py breaker recovery tests).
+        todo = todo.where(~is_tripped)
 
-    rest = run_extraction(
-        todo, num_partitions=num_partitions, model_loaded=model_loaded
-    )
-    # Model-not-loaded is an *infrastructure* condition (breaker open /
-    # backend down), not a property of the document — checkpointing such a
-    # row would permanently exclude the url from re-extraction because
-    # completed_urls marks every written url done. Skipped rows are simply
-    # not appended, so the next run with a healthy backend retries exactly
-    # those urls and the result set converges (tests/test_pipeline.py
-    # breaker recovery tests). Document-level failures (malformed payload,
-    # invalid backend/mode) ARE results and stay checkpointed.
-    rest = rest.where(
-        F.col("error").isNull() | (F.col("error") != F.lit(ERR_MODEL_NOT_LOADED))
-    )
-    parts.append(rest)
+    parts.append(run_extraction(todo, num_partitions=num_partitions))
     results = parts[0]
     for extra in parts[1:]:
         results = results.unionByName(extra)
     results = results.withColumn("run_id", F.lit(run_id).cast("long"))
 
     try:
-        if bucketed_table is not None:
-            from ocr_project_spark.operators.resume import write_results_bucketed
-
-            write_results_bucketed(
-                results, bucketed_table, buckets, max_records_per_file
-            )
-        else:
-            writer = results.write.mode("append")
-            if max_records_per_file:
-                writer = writer.option("maxRecordsPerFile", max_records_per_file)
-            writer.parquet(results_path)
+        results.write.mode("append").option(
+            "maxRecordsPerFile", MAX_RECORDS_PER_FILE
+        ).parquet(results_path)
         if lineage_path:
-            this_run = (
-                spark.table(bucketed_table).where(F.col("run_id") == run_id)
-                if bucketed_table is not None
-                else this_run_results(spark, results_path, run_id)
-            )
-            lin = lineage_rows(this_run)
+            lin = lineage_rows(this_run_results(spark, results_path, run_id))
             if probe_fail_lineage is not None:
                 lin = lin.unionByName(probe_fail_lineage)
             lin.withColumn("run_id", F.lit(run_id).cast("long")).write.mode(

@@ -348,6 +348,101 @@ def test_half_open_probe_recovers_without_disabling_breaker(spark, tmp_path):
     assert final.where("backend = 'mineru' AND success").count() == 20
 
 
+def test_breaker_keeps_invalid_backend_rows(spark, tmp_path):
+    """With breakers open, a row whose backend is NULL or an unknown name is
+    never skipped: it must be extracted and written as an "Invalid backend"
+    document error, whether or not its url falls on the probe residue —
+    even once the unknown name has enough failed checks to look tripped."""
+    import zlib
+
+    from ocr_project_spark.operators.lineage import circuit_breaker_gate
+    from ocr_project_spark.pipeline import run_job
+
+    schema = "url string, html binary, backend string, doc_id long"
+    results_path = str(tmp_path / "results")
+    lineage_path = str(tmp_path / "lineage")
+    # run 1: poisoned mineru trips, and 12 unknown-backend rows give 'foo'
+    # at least 3 consecutive failed checks
+    foo_history = spark.createDataFrame(
+        [(f"https://s.example.org/foo{k}", bytearray(b"<html>f</html>"), "foo",
+          500 + k) for k in range(12)],
+        schema,
+    )
+    run_job(
+        spark,
+        _breaker_corpus(spark, 0, 40, False).unionByName(foo_history),
+        results_path,
+        lineage_path,
+    )
+    gate = circuit_breaker_gate(spark.read.parquet(lineage_path))
+    assert gate["mineru"] is False and gate["foo"] is False
+
+    def probe_split(prefix):
+        urls = [f"https://s.example.org/{prefix}{k}" for k in range(16)]
+        return (next(u for u in urls if zlib.crc32(u.encode()) % 4 == 0),
+                next(u for u in urls if zlib.crc32(u.encode()) % 4 != 0))
+
+    rows = []
+    for backend, prefix in ((None, "null"), ("foo", "foonew")):
+        for url in probe_split(prefix):
+            rows.append((url, bytearray(b"<html>x</html>"), backend,
+                         1000 + len(rows)))
+    run_job(
+        spark,
+        spark.createDataFrame(rows, schema),
+        results_path,
+        lineage_path,
+        circuit_breaker=True,
+        probe_mod=4,
+    )
+    written = spark.read.parquet(results_path).where("doc_id >= 1000").collect()
+    assert sorted(r["url"] for r in written) == sorted(r[0] for r in rows)
+    for r in written:
+        assert not r["success"]
+        assert r["error"].startswith("Invalid backend: ")
+
+
+def test_breaker_history_independent_of_partitioning(spark, tmp_path):
+    """The same breaker history run over 1 and over 8 input partitions
+    writes identical lineage rows and replays to identical breaker
+    verdicts after every run: a lineage health check is a url bucket, not
+    a Spark partition."""
+    from ocr_project_spark.operators.lineage import circuit_breaker_gate
+    from ocr_project_spark.pipeline import run_job
+
+    history = [
+        (0, 40, False, False),  # mineru poisoned: trips the breaker
+        (40, 80, False, True),  # still down: probe failures, lineage only
+        (40, 80, True, True),  # healed: probe successes close the breaker
+    ]
+    cols = ["run_id", "part_id", "backend", "n_docs", "n_success", "n_failed",
+            "n_bytes"]
+    seen = []
+    for n_parts in (1, 8):
+        results_path = str(tmp_path / f"results{n_parts}")
+        lineage_path = str(tmp_path / f"lineage{n_parts}")
+        lineages, verdicts = [], []
+        for lo, hi, healthy, breaker in history:
+            run_job(
+                spark,
+                _breaker_corpus(spark, lo, hi, healthy).repartition(n_parts),
+                results_path,
+                lineage_path,
+                circuit_breaker=breaker,
+                probe_mod=4,
+            )
+            lineage = spark.read.parquet(lineage_path)
+            lineages.append(sorted(tuple(r) for r in lineage.select(*cols).collect()))
+            verdicts.append(circuit_breaker_gate(lineage))
+        seen.append((lineages, verdicts))
+    assert seen[0] == seen[1]
+    # the history really exercises the breaker: open after run 1, closed
+    # again once the healed probes land
+    verdicts = seen[0][1]
+    assert verdicts[0]["mineru"] is False
+    assert verdicts[2]["mineru"] is True
+
+
 def test_lineage_is_incremental_appends(spark, tmp_path):
     """Each run appends ONE run_id worth of lineage computed from its own
     rows (never a rescan/overwrite of the full results table), and the
@@ -388,8 +483,8 @@ def test_lineage_is_incremental_appends(spark, tmp_path):
 
 def test_circuit_breaker_tie_order_deterministic(spark):
     """One run can append TWO lineage rows with the same (run_id, part_id)
-    for a backend — result lineage + probe-failure lineage both derive
-    part_id from spark_partition_id(). The replay's check order at such a
+    for a backend — result lineage + probe-failure lineage are grouped
+    separately over the same url buckets. The replay's check order at such a
     tie must be a pure function of the rows (resume determinism), never of
     execution order: ties break on (n_success, n_failed) ascending — the
     failed check (n_success 0) replays BEFORE the healthy one, matching

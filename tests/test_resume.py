@@ -42,9 +42,27 @@ def test_completed_urls_missing_dir(spark, tmp_path):
     assert completed_urls(spark, str(tmp_path / "nope")) is None
 
 
+def test_run_job_refuses_corrupt_results_store(spark, pages, tmp_path):
+    """A results store that exists but cannot be read is NOT a cold start:
+    re-extracting every url would append duplicates and break
+    exactly-once. run_job must raise and leave the store untouched."""
+    import os
+
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    results_path = tmp_path / "results"
+    results_path.mkdir()
+    (results_path / "part-00000.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Py4JJavaError, match="is not a Parquet file"):
+        run_job(spark, pages, str(results_path))
+    assert os.listdir(results_path) == ["part-00000.parquet"]
+    assert (results_path / "part-00000.parquet").read_bytes() == b"not parquet"
+
+
 def test_crash_and_rerun_converges(spark, pages, tmp_path):
     results_path = str(tmp_path / "results")
-    full = run_extraction(pages, repartition=False)
+    full = run_extraction(pages)
 
     # simulated crash: only half the urls were written in run #1
     partial = full.where(F.xxhash64("url") % 2 == 0)
@@ -137,70 +155,3 @@ def test_crawl_delta_null_payload_transitions(spark):
     got = {r["url"]: r["status"] for r in crawl_delta(old, new).collect()}
     assert got == {"u/a": "changed", "u/b": "changed"}
 
-
-def test_run_job_bucketed_crash_rerun_noop(spark, pages, tmp_path):
-    """run_job(bucketed_table=...) — verdict item 8: the PLANS §2b bucketed
-    checkpoint as a first-class run_job store. Crash/rerun converges to one
-    row per url (same suite as the plain-parquet store), a completed rerun
-    is a noop, lineage run_ids stay monotone, and the resume anti-join's
-    done side reads the bucketed table with NO exchange."""
-    from ocr_project_spark.operators.resume import completed_urls_bucketed
-
-    table = "test_run_job_bucketed"
-    lineage_path = str(tmp_path / "lineage")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    try:
-        # run #1 "crashes" after covering an arbitrary half of the urls
-        run_job(
-            spark,
-            pages.where(F.xxhash64("url") % 2 == 0),
-            None,
-            lineage_path,
-            bucketed_table=table,
-            buckets=8,
-        )
-        n_partial = spark.table(table).count()
-        assert 0 < n_partial < pages.count()
-
-        # run #2 resumes: only the missing urls extract, result converges
-        run_job(spark, pages, None, lineage_path, bucketed_table=table, buckets=8)
-        final = spark.table(table)
-        assert final.count() == pages.count()
-        assert final.groupBy("url").count().where(F.col("count") > 1).count() == 0
-        # both runs' appends carry their own run_id
-        assert {r[0] for r in final.select("run_id").distinct().collect()} == {0, 1}
-        assert spark.read.parquet(lineage_path).select("run_id").distinct().count() == 2
-
-        # run #3 is a noop (no new results rows, lineage may append an empty run)
-        run_job(spark, pages, None, lineage_path, bucketed_table=table, buckets=8)
-        assert spark.table(table).count() == pages.count()
-
-        # recovered text identical to a clean full run (byte-identity holds
-        # across the store switch)
-        clean = {
-            r["url"]: r["text"]
-            for r in run_extraction(pages, repartition=False)
-            .select("url", "text")
-            .collect()
-        }
-        resumed = {r["url"]: r["text"] for r in final.select("url", "text").collect()}
-        assert resumed == clean
-
-        # the done side of the resume anti-join is exchange-free: only the
-        # incoming pages side shuffles (the PLANS §2b contract)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            todo = resume_filter(pages, completed_urls_bucketed(spark, table))
-            plan = todo._sc._jvm.PythonSQLUtils.explainString(
-                todo._jdf.queryExecution(), "formatted"
-            )
-            assert "LeftAnti" in plan
-            import re
-
-            n_exchange = len(re.findall(r"\(\d+\) Exchange", plan))
-            assert n_exchange == 1, plan
-            assert "Bucketed: true" in plan
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
