@@ -106,12 +106,14 @@ def _extract_run(
     return best[0], n_docs, best[1]
 
 
-def _kernel_chunk(payloads: list[bytes]) -> int:
-    from ocr_project_spark.kernels.registry import process_html_arm
+def _kernel_chunk(rows: list[tuple[str, bytes]]) -> int:
+    """Run each (backend, payload) through its ``BACKEND_REGISTRY`` arm —
+    the dispatch the extraction job does."""
+    from ocr_project_spark.kernels.registry import BACKEND_REGISTRY
 
-    for pl in payloads:
-        process_html_arm(pl)
-    return len(payloads)
+    for backend, payload in rows:
+        BACKEND_REGISTRY[backend](payload, None)
+    return len(rows)
 
 
 # clean-window bare-kernel references on this box (BENCH.md recalibration):
@@ -124,8 +126,9 @@ def _bare_kernel_calibration(
     pages_path: str, procs_list: tuple[int, ...] = (8, 32), n_docs: int = 20_000
 ) -> dict:
     """Same-window hardware baseline, measured UNCONDITIONALLY in every
-    invocation: the per-doc extraction kernel (pure Python, no Spark, no
-    JVM) over a slice of the materialized pages table under plain
+    invocation: the per-doc extraction kernels (pure Python, no Spark, no
+    JVM), dispatched through ``BACKEND_REGISTRY`` as the job dispatches
+    them, over a slice of the materialized pages table under plain
     ``multiprocessing``. The sandbox VM has depression windows lasting
     minutes to tens of minutes in which ALL sustained compute runs
     severalfold slow; this number tells the reader which kind of window
@@ -141,20 +144,22 @@ def _bare_kernel_calibration(
 
     import pyarrow.parquet as pq
 
-    payloads: list[bytes] = []
+    rows: list[tuple[str, bytes]] = []
     max_docs = max(n_docs, 1)
     for part in sorted(glob.glob(os.path.join(pages_path, "*.parquet"))):
         pf = pq.ParquetFile(part)
-        for batch in pf.iter_batches(columns=["html"], batch_size=2048):
-            payloads.extend(batch.column(0).to_pylist())
-            if len(payloads) >= max_docs:
+        for batch in pf.iter_batches(columns=["backend", "html"], batch_size=2048):
+            rows.extend(
+                zip(batch.column(0).to_pylist(), batch.column(1).to_pylist())
+            )
+            if len(rows) >= max_docs:
                 break
-        if len(payloads) >= max_docs:
+        if len(rows) >= max_docs:
             break
-    payloads = payloads[:max_docs]
+    rows = rows[:max_docs]
     rates: dict[str, float] = {}
     for procs in procs_list:
-        chunks = [payloads[i::procs] for i in range(procs)]
+        chunks = [rows[i::procs] for i in range(procs)]
         with Pool(procs) as pool:
             pool.map(_kernel_chunk, [c[:8] for c in chunks])  # warm the pool
             t0 = time.monotonic()
@@ -163,7 +168,7 @@ def _bare_kernel_calibration(
         rates[str(procs)] = round(done / dt, 1)
     return {
         "docs_per_sec": rates,
-        "n_docs": len(payloads),
+        "n_docs": len(rows),
         "clean_ref": {str(k): v for k, v in BARE_KERNEL_CLEAN_REF.items()},
     }
 

@@ -100,12 +100,6 @@ def decode_netpbm(payload: bytes) -> np.ndarray:
     return img
 
 
-def encode_ppm(img: np.ndarray) -> bytes:
-    """(h, w, 3) uint8 → binary PPM bytes (the test-fixture inverse)."""
-    h, w, _ = img.shape
-    return b"P6\n%d %d\n255\n" % (w, h) + img.astype(np.uint8).tobytes()
-
-
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 # channels per PNG color type: gray, RGB, palette, gray+alpha, RGBA
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
@@ -634,17 +628,6 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
         n = len(samples) // channels * channels
         samples = samples[:n].reshape(-1, channels).mean(axis=1)
     return samples, rate
-
-
-def encode_wav(samples: np.ndarray, rate: int) -> bytes:
-    """mono float [-1,1] → 16-bit PCM WAV bytes (the test-fixture inverse)."""
-    import struct
-
-    pcm = (np.clip(samples, -1.0, 1.0) * 32767).astype("<i2").tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-    chunks = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(pcm)) + pcm
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
 
 
 def audio_features(media: DataFrame, decode: str = "strict") -> DataFrame:

@@ -152,7 +152,7 @@ def main() -> None:
         "overwrite"
     ).parquet(warm_path)
     synthesize_pages(prep, sf_dir, replicate=4, num_partitions=16).select(
-        "html"
+        "backend", "html"
     ).write.mode("overwrite").parquet(probe_path)
 
     # guard the corpus shape: replicas of one doc must NOT be near-dups of

@@ -158,7 +158,7 @@ def test_html_kernel_entities():
 def test_html_kernel_unclosed_tags():
     html = b"<html><body><p>first para<p>second para</body></html>"
     pages = extract_html_pages(html)
-    # html.parser sees no </p>; the second <p> opens a new block
+    # the scanner sees no </p>; the second <p> opens a new block
     texts = pages[0][1]
     assert "second para" in " ".join(texts)
 

@@ -80,7 +80,7 @@ def test_frame_sampling_explode(media):
 def _ppm_media(spark, n=8):
     import numpy as np
 
-    from ocr_project_spark.multimodal import encode_ppm
+    from tests.fixture_codecs import encode_ppm
 
     rows = []
     dims = []
@@ -103,7 +103,8 @@ def _ppm_media(spark, n=8):
 def test_real_netpbm_decode_roundtrip():
     import numpy as np
 
-    from ocr_project_spark.multimodal import decode_netpbm, encode_ppm
+    from ocr_project_spark.multimodal import decode_netpbm
+    from tests.fixture_codecs import encode_ppm
 
     img = (np.arange(5 * 7 * 3).reshape(5, 7, 3) % 256).astype("uint8")
     assert np.array_equal(decode_netpbm(encode_ppm(img)), img)
@@ -149,7 +150,8 @@ def test_strict_mode_still_raises_on_undecodable(spark, media):
 def test_real_wav_decode_roundtrip():
     import numpy as np
 
-    from ocr_project_spark.multimodal import decode_wav, encode_wav
+    from ocr_project_spark.multimodal import decode_wav
+    from tests.fixture_codecs import encode_wav
 
     t = np.arange(8000) / 8000.0
     sine = 0.5 * np.sin(2 * np.pi * 440 * t)
@@ -163,7 +165,8 @@ def test_audio_features_real_decode(spark):
     0.5-amplitude sine ≈ 0.354, zero crossings ≈ 2·f·duration."""
     import numpy as np
 
-    from ocr_project_spark.multimodal import MEDIA_SCHEMA, audio_features, encode_wav
+    from ocr_project_spark.multimodal import MEDIA_SCHEMA, audio_features
+    from tests.fixture_codecs import encode_wav
 
     rows = []
     for media_id, freq in ((0, 440), (1, 100)):
@@ -277,12 +280,8 @@ def test_png_gray_matches_netpbm_decode():
     same image (round-trip cross-check per the round-2 verdict)."""
     import numpy as np
 
-    from ocr_project_spark.multimodal import (
-        decode_netpbm,
-        decode_png,
-        encode_png,
-        encode_ppm,
-    )
+    from ocr_project_spark.multimodal import decode_netpbm, decode_png, encode_png
+    from tests.fixture_codecs import encode_ppm
 
     img = _gradient_rgb(17, 29)
     via_ppm = decode_netpbm(encode_ppm(img))
@@ -341,7 +340,8 @@ def test_image_features_strict_on_png(spark):
     """A PNG payload must ride the REAL strict path now (round-2 verdict:
     a real crawl corpus is mostly PNG/JPEG), agreeing with the netpbm
     decode of the same pixels."""
-    from ocr_project_spark.multimodal import encode_png, encode_ppm, image_features
+    from ocr_project_spark.multimodal import encode_png, image_features
+    from tests.fixture_codecs import encode_ppm
 
     img = _gradient_rgb(700, 900)
     media = spark.createDataFrame(
@@ -356,7 +356,8 @@ def test_image_features_strict_on_png(spark):
 
 
 def test_image_tiles_strict_on_png(spark):
-    from ocr_project_spark.multimodal import encode_png, encode_ppm, image_tiles
+    from ocr_project_spark.multimodal import encode_png, image_tiles
+    from tests.fixture_codecs import encode_ppm
 
     img = _gradient_rgb(650, 1300)
     media = spark.createDataFrame(

@@ -128,7 +128,8 @@ def test_assemble_pages_property(contents, ):
 def test_netpbm_roundtrip_property(w, h, seed):
     import numpy as np
 
-    from ocr_project_spark.multimodal import decode_netpbm, encode_ppm
+    from ocr_project_spark.multimodal import decode_netpbm
+    from tests.fixture_codecs import encode_ppm
 
     rng = np.random.default_rng(seed)
     img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
@@ -144,7 +145,8 @@ def test_netpbm_roundtrip_property(w, h, seed):
 def test_wav_roundtrip_property(n, rate, seed):
     import numpy as np
 
-    from ocr_project_spark.multimodal import decode_wav, encode_wav
+    from ocr_project_spark.multimodal import decode_wav
+    from tests.fixture_codecs import encode_wav
 
     rng = np.random.default_rng(seed)
     samples = rng.uniform(-1, 1, size=n)
@@ -256,8 +258,8 @@ def test_jpeg_unit_quant_roundtrip_property(bw, bh, seed, mode, restart):
 # of the documented block rules (boilerplate subtrees drop, block tags open/
 # implicitly close blocks, link-density < 0.5 keeps, div pushes/pops the
 # page stack, data-page digits switch pages). The interpreter walks the
-# generated tree directly, so the comparison also proves html.parser's
-# tokenization (entity decode, case folding, attribute quoting, CDATA) maps
+# generated tree directly, so the comparison also proves the kernel's
+# scanner tokenizes (entity decode, case folding, attribute quoting, CDATA)
 # 1:1 onto the node semantics the kernel assumes.
 # ---------------------------------------------------------------------------
 
@@ -374,7 +376,7 @@ def _render_fuzz(node, out):
 
 class _RefExtractor:
     """Slow reference interpreter of the documented block rules, driven by
-    the generated node tree (NOT by html.parser) — recursion + explicit
+    the generated node tree (NOT by an HTML tokenizer) — recursion + explicit
     state instead of the kernel's flat event stream."""
 
     def __init__(self):
@@ -578,3 +580,45 @@ def test_html_fuzz_unbalanced_stream_matches_reference_rules(events):
     else:
         with pytest.raises(ValueError, match="no text blocks"):
             extract_html_pages(payload)
+
+
+# differential gate of the html scanner: on arbitrary bytes the kernel must
+# return exactly what the stdlib html.parser walk it replaced returns
+# (tests/html_oracle.py), or fail the same way. Pieces are weighted toward
+# markup so tags, attributes, comments, declarations, character references
+# and raw-text elements — complete, broken and cut off at EOF — all occur.
+_MARKUP_PIECES = st.sampled_from(
+    [
+        # single characters that open, close or break markup
+        b"<", b">", b"/", b"!", b"?", b"-", b"&", b"#", b";", b"=",
+        b'"', b"'", b" ", b"\n", b"\x0b", b"\x00",
+        # names, values and text
+        b"div", b"DIV", b"data-page", b"script", b"style", b"p", b"a",
+        b"nav", b"x", b"0", b"1", b"2", b"9", b"\xc2\xb2",
+        # whole and partial constructs
+        b"<p>", b"<p>", b"<p>", b"</p>", b"<a>", b"</a>", b"<div ", b"</div>",
+        b"data-page=", b" data-page=1", b"<a b='", b"<a", b"<script>",
+        b"</script", b"</script>", b"<style>",
+        b"<!--", b"-->", b"<![", b"CDATA[", b"]]>", b"<!DOCTYPE", b"<?",
+        b"</", b"&amp", b"&amp;", b"&#x", b"&#",
+    ]
+)
+
+
+@st.composite
+def _markup_payloads(draw):
+    payload = b"".join(draw(st.lists(_MARKUP_PIECES, max_size=60)))
+    if draw(st.integers(min_value=0, max_value=19)) == 0:
+        at = draw(st.integers(min_value=0, max_value=len(payload)))
+        payload = payload[:at] + b"\xff" + payload[at:]  # invalid utf-8
+    return payload
+
+
+@settings(max_examples=3000, deadline=None)
+@given(payload=_markup_payloads())
+def test_html_scanner_matches_stdlib_oracle(payload):
+    from tests.html_oracle import oracle_extract_html_pages, outcome
+
+    assert outcome(extract_html_pages, payload) == outcome(
+        oracle_extract_html_pages, payload
+    )

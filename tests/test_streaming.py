@@ -363,3 +363,36 @@ def test_stateless_curation_ops_compose_with_streams(spark, documents, tmp_path)
     )
     q.awaitTermination(120)
     assert spark.read.parquet(out).count() == want.count()
+
+
+def test_streaming_near_dup_query_cleans_up_on_failure(spark, monkeypatch):
+    """A failing micro-batch must still drop the query's index tables and
+    remove its temp dir; the index name carries the whole temp suffix."""
+    import tempfile
+
+    import pytest
+
+    import __spark_entry__ as entry
+    from ocr_project_spark.streaming import incremental
+    from tests.conftest import SF_DIR
+
+    made = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def mkdtemp(*args, **kwargs):
+        made.append(real_mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    def failing_stream(spark, inp, idx, *args, **kwargs):
+        made.append(idx)
+        spark.sql(f"CREATE TABLE {idx}_bands (x INT) USING parquet")
+        raise RuntimeError("micro-batch failed")
+
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+    monkeypatch.setattr(incremental, "near_dup_stream", failing_stream)
+    with pytest.raises(RuntimeError, match="micro-batch failed"):
+        entry.q_streaming_near_dup(spark, SF_DIR)
+    work, idx = made
+    assert idx == "nd_q_" + os.path.basename(work)[len("stream_nd_"):].lower()
+    assert not os.path.exists(work)
+    assert not spark.catalog.tableExists(f"{idx}_bands")
