@@ -15,6 +15,7 @@ edited without updating the golden tests.
 from __future__ import annotations
 
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # --- Backend registry (reference: orchestrator/config.py:11-28) -------------
 # The reference routes each request to one of two GPU services; we keep the
@@ -137,6 +138,8 @@ JVM_DERIVED_FIELDS = ("file_name", "source_markdown")
 CORE_RESULT_SCHEMA = T.StructType(
     [f for f in RESULT_SCHEMA.fields if f.name not in JVM_DERIVED_FIELDS]
 )
+# Its Arrow form: the types the extraction callable builds its columns in.
+CORE_RESULT_ARROW_SCHEMA = to_arrow_schema(CORE_RESULT_SCHEMA)
 
 # --- Lineage schema (north rule: per-partition lineage rows) ----------------
 # part_id is a url bucket, pmod(xxhash64(url), LINEAGE_BUCKETS) — see

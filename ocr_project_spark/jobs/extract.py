@@ -6,10 +6,11 @@ Usage (cluster):
         --pages <table-or-parquet-path> --results <out> --lineage <out> \\
         [--num-partitions N] [--synthesize-sf-dir DIR [--replicate K]]
 
-The job is the SURVEY §3.1 plan: read pages → validate/dispatch → anti-join
-against already-written results (resume) → url-hash repartition →
-Arrow-batch extraction → append results + overwrite lineage. Re-running
-after a crash extracts only missing urls (see operators/resume.py).
+The job is the SURVEY §3.1 plan: read pages → anti-join against
+already-written results (resume) → one columnar Arrow extraction pass in
+the input's own splits → append results + lineage; a cold start is one
+stage with no exchange. Re-running after a crash extracts only missing
+urls (see operators/resume.py).
 
 Local smoke (no cluster):
     python -m ocr_project_spark.jobs.extract \\
@@ -33,7 +34,12 @@ def parse_args(argv=None):
     p.add_argument("--replicate", type=int, default=1)
     p.add_argument("--results", required=True, help="results output path")
     p.add_argument("--lineage", help="lineage output path")
-    p.add_argument("--num-partitions", type=int, default=None)
+    p.add_argument(
+        "--num-partitions",
+        type=int,
+        help="at most N extraction tasks: input splits merge without a "
+        "shuffle (default: one task per split)",
+    )
     p.add_argument("--master", default=None)
     p.add_argument(
         "--wet",

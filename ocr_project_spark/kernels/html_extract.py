@@ -20,7 +20,7 @@ parsed, and only ``data-page`` is kept. ``tests/html_oracle.py`` keeps the
 stdlib-based walk as the differential oracle.
 
 The kernel is a pure function ``bytes -> list[(page_1idx, [block_text])]``;
-the Spark layer runs it inside Arrow-batched ``mapInPandas`` (no per-row
+the Spark layer runs it inside Arrow-batched ``mapInArrow`` (no per-row
 Python at the DataFrame level).
 """
 

@@ -2,7 +2,7 @@
 
 The reference's backend registry is a static map name → HTTP service
 (reference: orchestrator/config.py:11-28); ours is a plain dict name →
-deterministic extraction callable resolved inside the pandas UDF — no
+deterministic extraction callable resolved inside the Arrow-batch UDF — no
 network, same dispatch semantics (exact name match, no fallback,
 reference: orchestrator/server.py:152-166 / PLAN.md:209-213).
 

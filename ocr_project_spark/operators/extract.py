@@ -2,10 +2,14 @@
 
 This is the Spark-native collapse of the reference's three process boundaries
 (orchestrator HTTP hop, backend Flask hop, vLLM engine — SURVEY §3.1): a
-single ``mapInPandas`` over Arrow record batches. Dispatch (R2) is row-local
-(no shuffle); validation rejects (R1) become error rows instead of HTTP 400s
-(reference: orchestrator/server.py:127-135); the health gate (R3) becomes
-per-document fault isolation plus an optional model-loaded short-circuit.
+single ``mapInArrow`` over the scanned pages' Arrow record batches. Each
+input column is read once as a Python list and each output column is built
+straight into an Arrow array of ``CORE_RESULT_ARROW_SCHEMA``, so no
+row-oriented frame sits on either side of the boundary. Dispatch (R2) is
+row-local (no shuffle); validation rejects (R1) become error rows instead of
+HTTP 400s (reference: orchestrator/server.py:127-135); the health gate (R3)
+becomes per-document fault isolation plus an optional model-loaded
+short-circuit.
 
 Zero per-row Python at the DataFrame level: the per-document loop runs inside
 the Arrow batch on the executor, exactly where the reference's per-request
@@ -15,13 +19,14 @@ loop ran inside its GPU service.
 from __future__ import annotations
 
 import time
-from typing import Iterator
+from typing import Iterator, Sequence
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
 from ocr_project_spark.contract import (
+    CORE_RESULT_ARROW_SCHEMA,
     CORE_RESULT_SCHEMA,
     ERR_INVALID_BACKEND_FMT,
     ERR_INVALID_MODE_FMT,
@@ -53,119 +58,105 @@ def _reject(backend: str, err: str) -> DocResult:
     )
 
 
-def _result_row(
-    url: str,
-    doc_id: int,
-    res: DocResult,
-    elapsed: float = 0.0,
+def _extract_one(backend, payload, sel, mode, locate_ref, gate) -> DocResult:
+    if backend not in BACKEND_REGISTRY:
+        return _reject(
+            backend if backend is not None else "",
+            ERR_INVALID_BACKEND_FMT.format(
+                backend=backend, valid=", ".join(VALID_BACKENDS)
+            ),
+        )
+    if mode and mode not in VALID_MODES:
+        # R1 analog: a typo'd mode must surface, not silently behave as
+        # grounding (mirrors the unknown-backend path)
+        return _reject(
+            backend,
+            ERR_INVALID_MODE_FMT.format(mode=mode, valid=", ".join(VALID_MODES)),
+        )
+    if payload is None or len(payload) == 0:
+        return _reject(backend, ERR_MISSING_DOCUMENT)
+    if not gate.get(backend, True):
+        return model_not_loaded_result(backend)
+    if mode:
+        return BACKEND_REGISTRY[backend](payload, sel, mode, locate_ref)
+    return BACKEND_REGISTRY[backend](payload, sel)
+
+
+def make_extract_fn(
+    model_loaded: dict | None = None,
     raster_boxes: bool = False,
-) -> dict:
-    render = render_boxes_png if raster_boxes else render_boxes_svg
-    return {
-        "url": url,
-        "doc_id": doc_id,
-        "backend": res.backend,
-        "file_type": res.file_type,
-        "success": res.success,
-        "markdown": res.markdown,
-        "text": res.text,
-        "raw_output": res.raw_output,
-        "spans": [
-            {"ref": s[0], "x1": s[1], "y1": s[2], "x2": s[3], "y2": s[4]}
-            for s in res.spans
-        ],
-        # deterministic analog of the reference's boxes_image — rendered
-        # only on the single-page image path, exactly like the reference
-        # (deepseek_ocr_backend.py:176 image path vs 234 pdf path = "";
-        # default "" at api_contract.py:215). Default: SVG (codec-free);
-        # raster_boxes=True: base64 PNG in the reference's wire shape with
-        # a fixed palette (render_boxes_png)
-        "boxes_image": render(res.spans)
-        if res.spans and res.file_type == FILE_TYPE_IMAGE
-        else "",
-        "page_count": res.page_count,
-        "processed_pages": list(res.processed_pages),
-        "n_bytes": len(res.text.encode("utf-8")),
-        "processing_time": elapsed,
-        "error": res.error,
-    }
+    columns: Sequence[str] = ("url", "html", "backend", "doc_id"),
+):
+    """Build the mapInArrow callable over batches holding ``columns`` (url,
+    html, backend and any of doc_id, pages, mode, prompt). ``model_loaded``
+    maps backend name → bool and defaults to all-loaded (the reference's
+    steady state). ``raster_boxes=True`` emits boxes_image as base64 PNG
+    (the reference's wire shape) instead of the default SVG analog.
 
-
-_COLUMNS = [f.name for f in CORE_RESULT_SCHEMA.fields]
-
-
-def make_extract_fn(model_loaded: dict | None = None, raster_boxes: bool = False):
-    """Build the mapInPandas callable; ``model_loaded`` maps backend name →
-    bool and defaults to all-loaded (the reference's steady state).
-    ``raster_boxes=True`` emits boxes_image as base64 PNG (the reference's
-    wire shape) instead of the default SVG analog."""
+    Each column is read once with ``batch[name].tolist()`` (any frame whose
+    columns answer ``tolist`` works, not only an Arrow record batch); a
+    NULL ``doc_id`` passes through as a NULL instead of failing the
+    batch."""
     gate = model_loaded or {}
+    render = render_boxes_png if raster_boxes else render_boxes_svg
+    has_prompt = "prompt" in columns
 
     def _extract_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            has_pages = "pages" in pdf.columns
-            has_doc_id = "doc_id" in pdf.columns
-            has_mode = "mode" in pdf.columns
-            has_prompt = "prompt" in pdf.columns
-            rows = []
-            for i in range(len(pdf)):
-                url = pdf["url"].iat[i]
-                doc_id = int(pdf["doc_id"].iat[i]) if has_doc_id else -1
-                backend = pdf["backend"].iat[i]
-                payload = pdf["html"].iat[i]
-                sel = None
-                if has_pages:
-                    raw_sel = pdf["pages"].iat[i]
-                    if raw_sel is not None and len(raw_sel) > 0:
-                        sel = [int(p) for p in raw_sel]
+        batches: Iterator[pa.RecordBatch],
+    ) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            col = {name: batch[name].tolist() for name in columns}
+            nulls = [None] * len(col["url"])
+            results, elapsed = [], []
+            for backend, payload, sel, mode, prompt in zip(
+                col["backend"],
+                col["html"],
+                col.get("pages", nulls),
+                col.get("mode", nulls),
+                col.get("prompt", nulls),
+            ):
                 # explicit mode column wins; else a per-request prompt maps
                 # to a mode (reference: free-form prompt on the DeepSeek arm)
-                mode = pdf["mode"].iat[i] if has_mode else None
                 locate_ref = None
                 if has_prompt:
-                    prompt = pdf["prompt"].iat[i]
                     if not mode:
                         mode = resolve_mode(prompt)
                     locate_ref = locate_target(prompt)
                 t0 = time.perf_counter()
-                if backend not in BACKEND_REGISTRY:
-                    res = _reject(
-                        backend if backend is not None else "",
-                        ERR_INVALID_BACKEND_FMT.format(
-                            backend=backend, valid=", ".join(VALID_BACKENDS)
-                        ),
-                    )
-                elif mode and mode not in VALID_MODES:
-                    # R1 analog: a typo'd mode must surface, not silently
-                    # behave as grounding (mirrors the unknown-backend path)
-                    res = _reject(
-                        backend,
-                        ERR_INVALID_MODE_FMT.format(
-                            mode=mode, valid=", ".join(VALID_MODES)
-                        ),
-                    )
-                elif payload is None or len(payload) == 0:
-                    res = _reject(backend, ERR_MISSING_DOCUMENT)
-                elif not gate.get(backend, True):
-                    res = model_not_loaded_result(backend)
-                elif mode:
-                    res = BACKEND_REGISTRY[backend](
-                        bytes(payload), sel, mode, locate_ref
-                    )
-                else:
-                    res = BACKEND_REGISTRY[backend](bytes(payload), sel)
-                rows.append(
-                    _result_row(
-                        url,
-                        doc_id,
-                        res,
-                        time.perf_counter() - t0,
-                        raster_boxes=raster_boxes,
-                    )
+                results.append(
+                    _extract_one(backend, payload, sel or None, mode, locate_ref, gate)
                 )
-            yield pd.DataFrame(rows, columns=_COLUMNS)
+                elapsed.append(time.perf_counter() - t0)
+            # every other output column is the DocResult field of its name
+            derived = {
+                "url": col["url"],
+                "doc_id": col.get("doc_id", [-1] * len(nulls)),
+                # deterministic analog of the reference's boxes_image,
+                # rendered only on the single-page image path like the
+                # reference (deepseek_ocr_backend.py:176 vs 234 pdf path =
+                # ""; default "" at api_contract.py:215)
+                "boxes_image": [
+                    render(r.spans)
+                    if r.spans and r.file_type == FILE_TYPE_IMAGE
+                    else ""
+                    for r in results
+                ],
+                "n_bytes": [len(r.text.encode("utf-8")) for r in results],
+                "processing_time": elapsed,
+            }
+            # spans: (ref, x1, y1, x2, y2) tuples convert to the span structs
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(
+                        derived[f.name]
+                        if f.name in derived
+                        else [getattr(r, f.name) for r in results],
+                        f.type,
+                    )
+                    for f in CORE_RESULT_ARROW_SCHEMA
+                ],
+                schema=CORE_RESULT_ARROW_SCHEMA,
+            )
 
     return _extract_batches
 
@@ -175,7 +166,8 @@ def extract_documents(
     model_loaded: dict | None = None,
     raster_boxes: bool = False,
 ) -> DataFrame:
-    """pages(url, html, backend[, doc_id, pages]) → unified result DataFrame.
+    """pages(url, html, backend[, doc_id, pages, mode, prompt]) → unified
+    result DataFrame.
 
     Narrow transformation: dispatch and extraction are row-local, so the
     input partitioning is preserved — no shuffle is introduced between the
@@ -183,12 +175,10 @@ def extract_documents(
     """
     from pyspark.sql import functions as F
 
-    cols = ["url", "html", "backend"]
-    for opt in ("doc_id", "pages", "mode", "prompt"):
-        if opt in pages_df.columns:
-            cols.append(opt)
-    core = pages_df.select(*cols).mapInPandas(
-        make_extract_fn(model_loaded, raster_boxes=raster_boxes),
+    optional = ("doc_id", "pages", "mode", "prompt")
+    cols = ["url", "html", "backend", *(c for c in optional if c in pages_df.columns)]
+    core = pages_df.select(*cols).mapInArrow(
+        make_extract_fn(model_loaded, raster_boxes, cols),
         schema=CORE_RESULT_SCHEMA,
     )
     # JVM-derived parity columns (contract.JVM_DERIVED_FIELDS): file_name =

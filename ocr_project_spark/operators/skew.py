@@ -5,11 +5,11 @@ can hold millions of pages. Two distinct mechanisms defuse it:
 
 1. **Row placement** (`salted_repartition`): partitions are assigned by
    ``xxhash64(url)`` — urls are unique, so placement is uniform by
-   construction and a hot host's pages spread across *all* partitions (this
-   is the salting effect the north rule's "bucketed by url-hash with salted
-   repartitioning" asks for at the extraction stage: no executor ever owns a
-   whole domain). Placement is a pure function of (url, num_partitions), so
-   re-runs place every url identically — required for resume determinism.
+   construction and a hot host's pages spread across *all* partitions.
+   Extraction no longer uses it: lineage and the breaker bucket by the url
+   hash themselves, so extraction runs in the scan's byte-sized splits with
+   no payload shuffle (pipeline.run_extraction). It stays for callers that
+   must co-locate rows by url; the benchmark's exchange rung times it.
    An earlier design bucketed by ``xxhash64(host)``; with far fewer distinct
    hosts than partitions that *creates* stragglers (measured 4× slowdown at
    local[32] on the synthetic corpus) — keys must outnumber partitions.

@@ -1,11 +1,12 @@
 """End-to-end extraction pipeline (SURVEY §3.1 "Spark rebuild" plan):
 
-    read pages → validate/dispatch → anti-join resume → salted repartition
-    → mapInPandas extraction → results + lineage sinks
+    read pages → anti-join resume → mapInArrow extraction → results +
+    lineage sinks
 
-One logical plan; Catalyst handles staging. The only shuffles are the
-(optional) salted repartition and the resume anti-join — extraction itself
-is narrow and the lineage aggregation is a partial-agg-friendly groupBy.
+A cold start is one stage with no Exchange (scan → MapInArrow → write):
+extraction runs in the input's own splits, so no payload is shuffled. What
+shuffles remain are the resume anti-join's, when the done set is too large
+to broadcast, and the partial-agg-friendly lineage groupBy.
 """
 
 from __future__ import annotations
@@ -20,7 +21,6 @@ from ocr_project_spark.operators.resume import (
     read_parquet_if_exists,
     resume_filter,
 )
-from ocr_project_spark.operators.skew import salted_repartition
 
 # Half-open circuit-breaker probe: while a backend's breaker is open, urls
 # with crc32(url) % HALF_OPEN_PROBE_MOD == 0 (a deterministic ~1/16 sample,
@@ -36,10 +36,10 @@ MAX_RECORDS_PER_FILE = 500_000
 
 def run_extraction(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """pages → unified results DataFrame (lazy; caller writes/aggregates).
-    ``num_partitions`` adds the salted url-hash repartition; None extracts
-    in the input's own partitioning."""
+    ``num_partitions`` caps the extraction tasks with a narrow ``coalesce``
+    (no shuffle); None extracts in the input's own partitioning."""
     if num_partitions:
-        pages = salted_repartition(pages, num_partitions)
+        pages = pages.coalesce(num_partitions)
     return extract_documents(pages)
 
 

@@ -8,7 +8,7 @@ exactly-once over *segments* — complementary to the batch anti-join resume
 (`operators/resume.py`), which dedupes at url granularity.
 
 The transformation is the very same `extract_documents` Arrow-batch
-operator — `mapInPandas` is streaming-compatible, so batch and streaming
+operator — `mapInArrow` is streaming-compatible, so batch and streaming
 share one code path (no semantic drift between the two).
 
 `trigger(availableNow=True)` drains everything pending and stops — the

@@ -1,7 +1,7 @@
 """Dispatch / validation / error-semantics tests (SURVEY §2.2 R1-R4, §2.5 P7).
 
 Pure-Python checks on the registry arms plus Spark-level dispatch through the
-mapInPandas extraction operator, mirroring the reference's contract tests
+mapInArrow extraction operator, mirroring the reference's contract tests
 (deployment/test_phase3_web_client.sh:118-182: invalid backend rejected,
 required fields present, both backends respond, invalid payload handled).
 """
@@ -266,3 +266,95 @@ def test_locate_prompt_mode(spark):
     assert hit["text"] == " ".join(refs)
     miss = out["miss"]
     assert miss["success"] and miss["spans"] == [] and miss["raw_output"] == ""
+
+
+def test_null_doc_id_row_is_written(spark):
+    """A NULL doc_id is a property of one row: it is written with a NULL
+    doc_id and the rest of its batch is written too, never a failed task."""
+    rows = [
+        ("u0", build_html(0, "alpha beta", "en").encode(), BACKEND_HTML, 0),
+        ("u1", build_html(1, "gamma delta", "en").encode(), BACKEND_HTML, None),
+        ("u2", build_pagedoc(2, "epsilon zeta", "en").encode(), BACKEND_LAYOUT, 2),
+    ]
+    df = spark.createDataFrame(
+        rows, "url string, html binary, backend string, doc_id long"
+    ).coalesce(1)
+    out = {r["url"]: r for r in extract_documents(df).collect()}
+    assert set(out) == {"u0", "u1", "u2"}
+    assert out["u1"]["doc_id"] is None
+    assert out["u1"]["success"] and out["u1"]["text"] == "gamma delta"
+    assert [out[u]["doc_id"] for u in ("u0", "u2")] == [0, 2]
+
+
+def _oracle_cases():
+    """Inputs that walk every branch of the per-row wrapper: backend and
+    payload validation, page selections, mode and prompt resolution, and
+    NULL urls."""
+    import itertools
+
+    payloads = [
+        (BACKEND_HTML, build_html(0, "alpha beta gamma", "en").encode()),
+        (BACKEND_HTML, build_html(2, TEXT, "en").encode()),  # 3 pages
+        (BACKEND_HTML, b"<html><body></body></html>"),  # kernel error
+        (BACKEND_LAYOUT, build_pagedoc(2, TEXT, "en").encode()),
+        (BACKEND_LAYOUT, b"PAGEDOC1\n{bad json"),
+        (None, b"payload"),
+        ("no-such-backend", b"payload"),
+        (BACKEND_HTML, None),
+        (BACKEND_LAYOUT, b""),
+    ]
+    selections = [None, [], [99], [1, 3], [2]]
+    modes = [None, "", "free", "grounding", "locate", "fre"]
+    prompts = [
+        None,
+        "Locate <|ref|>alpha beta gamma<|/ref|> in the image.",
+        "Free OCR.",
+        "<image>\n<|grounding|>Convert the document to markdown.",
+        "Parse the figure.",
+    ]
+    rows = []
+    for i, ((backend, payload), sel, mode, prompt) in enumerate(
+        itertools.product(payloads, selections, modes, prompts)
+    ):
+        url = None if i % 37 == 5 else f"https://h.example.org/d/{i}.html"
+        rows.append((url, payload, backend, i, sel, mode, prompt))
+    return rows
+
+
+def test_extract_matches_pandas_oracle(spark):
+    """The columnar wrapper writes the same rows as the row-at-a-time
+    pandas wrapper it replaced (tests/extract_oracle.py), every column but
+    the wall-clock ``processing_time``, for each input shape and option."""
+    from ocr_project_spark.contract import CORE_RESULT_SCHEMA
+    from tests.extract_oracle import make_extract_fn as oracle_extract_fn
+
+    df = spark.createDataFrame(
+        _oracle_cases(),
+        "url string, html binary, backend string, doc_id long, "
+        "pages array<int>, mode string, prompt string",
+    ).cache()
+    narrow = df.select("url", "html", "backend").where("doc_id % 7 = 0")
+    core = [f.name for f in CORE_RESULT_SCHEMA.fields if f.name != "processing_time"]
+
+    def rows(frame):
+        return sorted((tuple(r) for r in frame.select(*core).collect()), key=repr)
+
+    checked = 0
+    for frame, model_loaded, raster in [
+        (df, None, False),
+        (df, {BACKEND_HTML: False}, False),
+        (df.where("doc_id % 3 = 0"), None, True),
+        (narrow, None, False),
+    ]:
+        got = rows(extract_documents(frame, model_loaded, raster_boxes=raster))
+        want = rows(
+            frame.mapInPandas(
+                oracle_extract_fn(model_loaded, raster_boxes=raster),
+                schema=CORE_RESULT_SCHEMA,
+            )
+        )
+        assert len(got) == len(want) == frame.count()
+        assert got == want
+        checked += len(got)
+    df.unpersist()
+    assert checked > 1000

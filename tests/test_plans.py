@@ -35,9 +35,11 @@ def results_path(spark, pages, tmp_path_factory):
     return path
 
 
-def test_extraction_has_single_shuffle_and_pruned_scan(spark, tmp_path_factory):
-    """SURVEY §3.1 / PLANS §3: scan pruned to the 4 extraction columns, ONE
-    url-hash exchange, narrow MapInPandas, parity fields as a projection."""
+def test_extraction_is_one_stage_with_pruned_scan(spark, tmp_path_factory):
+    """SURVEY §3.1 / PLANS §3: scan pruned to the 4 extraction columns, NO
+    exchange even with a partition bound (a narrow coalesce, so no payload
+    is shuffled), one columnar MapInArrow, parity fields as a projection
+    above it."""
     from ocr_project_spark.pipeline import run_extraction
 
     path = str(tmp_path_factory.mktemp("plans") / "pages")
@@ -45,16 +47,19 @@ def test_extraction_has_single_shuffle_and_pruned_scan(spark, tmp_path_factory):
 
     synthesize_pages(spark, "/root/testdata/sf0.001").write.parquet(path)
     plan = plan_of(run_extraction(spark.read.parquet(path), num_partitions=8))
-    assert n_nodes(plan, "Exchange") == 1  # only the url-hash repartition
-    assert "xxhash64(url" in plan
+    assert n_nodes(plan, "Exchange") == 0
     # column pruning reached the scan: none of the pruned columns are read
     read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln][0]
     for col in ("url", "html", "doc_id", "backend"):
         assert col in read_schema
     for col in ("warc_ts", "text:", "lang"):
         assert col not in read_schema
+    assert n_nodes(plan, "MapInArrow") == 1
+    assert "MapInPandas" not in plan
     # round-2 parity fields are a JVM projection above the Python stage
-    assert "MapInPandas" in plan and "Project" in plan
+    tree = plan.split("\n\n")[0].splitlines()
+    python_at = next(i for i, ln in enumerate(tree) if "MapInArrow" in ln)
+    assert any("Project" in ln for ln in tree[:python_at])
 
 
 def test_resume_antijoin_reads_only_url(spark, pages, results_path):
